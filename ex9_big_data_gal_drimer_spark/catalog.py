@@ -17,6 +17,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import state
 from .session import configure
 
 #: All tables the driver generates (TESTDATA.md).
@@ -93,49 +94,36 @@ def normalize_nano_timestamps(
     return df
 
 
-#: Inferred parquet schemas, memoized per (app, sf_dir, table) so only
-#: the FIRST load of a table pays the footer-inference job — with an
-#: explicit schema, plan construction launches no Spark job at all
-#: (pinned by test_plan_audit.test_no_action_during_query_construction).
-_SCHEMAS: dict[tuple[str, str, str], object] = {}
-
-
-#: Cache-time fan-out per (app, sf_dir, table) — populated ONLY by
-#: cache_tables.  A sub-128 MB parquet file scans as ONE partition, and
-#: a 1-partition cached fact table serializes every partial aggregate
-#: built on it (measured: q3's triple-distinct 0.65 s serial vs 0.27 s
-#: at 8-wide on the same data).  At 100 TB scans split naturally and
-#: this map stays empty — it corrects a local small-file artifact, not
-#: a scale design.
-_CACHE_PARTITIONS: dict[tuple[str, str, str], int] = {}
+def table_path(sf_dir: str, name: str) -> str:
+    """The parquet file of testdata table ``name`` — the input that
+    memos and stores over the table key on."""
+    return os.path.join(sf_dir, f"{name}.parquet")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one testdata table as a DataFrame, normalizing timestamps."""
+    """Load one testdata table as a DataFrame, normalizing timestamps.
+
+    Only the FIRST load of a table pays the schema-inference job (the
+    schema is memoized); later plan construction launches no Spark job
+    (pinned by test_plan_audit.test_no_action_during_query_construction)."""
     configure(spark)
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    schema = _SCHEMAS.get(key)
-    reader = spark.read.schema(schema) if schema is not None else spark.read
-    df = reader.parquet(path)
-    if schema is None:
-        _SCHEMAS[key] = df.schema
+    path = table_path(sf_dir, name)
+    schema = state.memo(
+        spark, "schema", path, build=lambda: spark.read.parquet(path).schema
+    )
+    df = spark.read.schema(schema).parquet(path)
     df = normalize_nano_timestamps(df, _NANO_TS_COLS.get(name, ()))
     # Must mirror the cached plan exactly: CacheManager substitutes the
     # in-memory relation only when the query's subtree matches it.
-    width = _CACHE_PARTITIONS.get(key)
-    if width:
-        df = df.repartition(width)
+    cached = state.memo(spark, "cached_table", path)
+    if cached is not None and cached[0]:
+        df = df.repartition(cached[0])
     return df
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Alias of :func:`load_table` for terse query code."""
     return load_table(spark, sf_dir, name)
-
-
-#: (applicationId, sf_dir, name) triples already cached via cache_tables.
-_CACHED: set[tuple[str, str, str]] = set()
 
 
 def cache_tables(spark: SparkSession, sf_dir: str, tables=TABLES) -> None:
@@ -148,26 +136,34 @@ def cache_tables(spark: SparkSession, sf_dir: str, tables=TABLES) -> None:
     suite then reads each parquet file exactly once instead of once
     per query per repeat.
 
+    Fact tables fan out to ``width`` partitions before caching: a
+    sub-128 MB parquet file scans as ONE partition, and a 1-partition
+    cached fact table serializes every partial aggregate built on it
+    (measured: q3's triple-distinct 0.65 s serial vs 0.27 s at 8-wide
+    on the same data).  Dims stay narrow — 16 partitions of a 25-row
+    table is pure task overhead.  The memo records (width, frame).
+
     Scale note: this is the bench/pipeline amortization path for
     results that fit executor storage.  At 100 TB you would NOT cache
     the fact tables — leave this uncalled and every query reads the
     (bucketed, pruned) parquet directly; Spark's LRU + MEMORY_AND_DISK
     keep it safe if called anyway.
     """
-    app = spark.sparkContext.applicationId
     width = min(spark.sparkContext.defaultParallelism, 16)
-    for name in tables:
-        key = (app, sf_dir, name)
-        if key in _CACHED:
-            continue
-        if name not in DIM_TABLES:
-            # Fan fact tables out before caching so partial aggregates
-            # parallelize (see _CACHE_PARTITIONS); dims stay narrow —
-            # 16 partitions of a 25-row table is pure task overhead.
-            _CACHE_PARTITIONS[key] = width
+
+    def cache(name: str) -> tuple[int, DataFrame]:
+        w = 0 if name in DIM_TABLES else width
         df = load_table(spark, sf_dir, name)
+        if w:
+            df = df.repartition(w)
         df.cache().count()
-        _CACHED.add(key)
+        return w, df
+
+    for name in tables:
+        state.memo(
+            spark, "cached_table", table_path(sf_dir, name),
+            build=lambda: cache(name),
+        )
 
 
 def release_caches(spark: SparkSession) -> None:
@@ -179,12 +175,11 @@ def release_caches(spark: SparkSession) -> None:
     session running many sf_dirs (pipeline CLI, notebooks) holds one
     entry per distinct input per cached operator (ADVICE r1).  Call
     this when a batch of work completes; subsequent queries simply
-    recompute/refill."""
+    recompute/refill.  This is the one release path of the session's
+    memos too (``state.release``): every memoized frame is unpersisted
+    and every memo misses afterwards."""
     spark.catalog.clearCache()
-    app = spark.sparkContext.applicationId
-    for key in {k for k in _CACHED if k[0] == app}:
-        _CACHED.discard(key)
-        _CACHE_PARTITIONS.pop(key, None)
+    state.release(spark)
 
 
 #: Query-created caches — intra-query intermediates persisted because

@@ -248,6 +248,10 @@ def incremental_components(
     sized) label map; the CC fixpoint runs on the contracted residue.
     At 100 TB the settled pair computation — the expensive part —
     never reruns; a daily batch pays only pairs-touching-new-data.
+
+    The 2-column delta projection is persisted with
+    ``catalog.query_persist``, so it stays cached until the caller
+    runs ``catalog.release_query_caches``.
     """
     lab_a = state.select(
         F.col("node").alias(src), F.col("component").alias("_ca")
@@ -265,8 +269,7 @@ def incremental_components(
     # two extra references.
     delta_edges = query_persist(delta_edges.select(src, dst))
     contracted = (
-        delta_edges.select(src, dst)
-        .join(lab_a, src, "left")
+        delta_edges.join(lab_a, src, "left")
         .join(lab_b, dst, "left")
         .select(
             F.coalesce("_ca", src).alias("cu"),

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import state
+
 
 def _unit_rows(X):
     """Row-normalize to unit L2 — on unit vectors, L2 ordering ≡
@@ -43,13 +45,6 @@ def _unit_rows(X):
     return X / n[:, None]
 
 
-#: Train-once memo: (applicationId, cache_key, m, k, n_iter, sample_n)
-#: → codebooks.  The fit is deterministic for a given corpus, so
-#: within one session it is a model artifact, not a recomputation —
-#: the in-process analogue of kmeans_fit_or_load's parquet store.
-_FIT_MEMO: dict = {}
-
-
 def pq_fit(
     emb: DataFrame,
     dim: int,
@@ -59,25 +54,26 @@ def pq_fit(
     sample_n: int = 2048,
     id_col: str = "vec_id",
     vec_col: str = "v",
-    cache_key: str | None = None,
+    source: str | None = None,
 ) -> list:
     """Train per-subspace codebooks; returns a nested Python list
     [m][k][dim/m] (the model).  Sampling is deterministic (smallest
     xxhash64(id) — same seeded-draw contract as kmeans_fit's init),
     Lloyd runs in numpy on the driver: PQ codebooks are model-sized
     and the sample bounds driver memory regardless of corpus size.
-    Pass `cache_key` (e.g. the sf_dir) to reuse an already-trained
-    model within the session (train-once-serve-many)."""
+    Pass `source` (the path `emb` was read from) to reuse an
+    already-trained model within the session (train-once-serve-many:
+    the fit is deterministic for a given corpus, so it is a model
+    artifact, not a recomputation)."""
+    if source is not None:
+        return state.memo(
+            emb.sparkSession, "pq_fit", source, m, k, n_iter, sample_n,
+            build=lambda: pq_fit(
+                emb, dim, m, k, n_iter, sample_n, id_col, vec_col
+            ),
+        )
     import numpy as np
 
-    memo_key = None
-    if cache_key is not None:
-        memo_key = (
-            emb.sparkSession.sparkContext.applicationId,
-            cache_key, m, k, n_iter, sample_n,
-        )
-        if memo_key in _FIT_MEMO:
-            return _FIT_MEMO[memo_key]
     assert dim % m == 0, "dim must divide into m subspaces"
     d_sub = dim // m
     tbl = (
@@ -111,8 +107,6 @@ def pq_fit(
             nz = counts > 0
             C[nz] = sums[nz] / counts[nz][:, None]
         books.append(C.tolist())
-    if memo_key is not None:
-        _FIT_MEMO[memo_key] = books
     return books
 
 
@@ -160,34 +154,30 @@ def pq_encode(
 
 
 
-#: (applicationId, cache_key) → (q_ids, tables); like _FIT_MEMO, the
-#: tables are a deterministic function of the (memoized) model and the
-#: deterministic query set, so re-collecting them per plan
-#: construction is pure overhead.
-_TABLES_MEMO: dict = {}
-
-
 def _query_adc_tables(
-    queries, books, dim, query_id_col, query_vec_col, cache_key=None
+    queries, books, dim, query_id_col, query_vec_col, source=None
 ):
     """(q_ids, {qid: m×k ADC table}) — exact subspace L2 distances of
     each query to every codeword, built as ONE vectorized pass LINEAR
     in query count (the per-(query, subspace) comprehension this
     replaced recomputed the full nq×k matrix per query — O(nq²)).
 
-    `cache_key` must identify the (model, QUERY SET) pair — callers
-    here derive both deterministically from sf_dir; pass None for any
-    ad-hoc query set."""
+    With a `source`, the tables are memoized per session: they are a
+    deterministic function of the (memoized) model and the query set,
+    so re-collecting them per plan construction is pure overhead.
+    `source` must then identify the (model, QUERY SET) pair — callers
+    here derive both deterministically from the embeddings input; pass
+    None for any ad-hoc query set."""
+    if source is not None:
+        return state.memo(
+            queries.sparkSession, "pq_adc_tables", source,
+            dim, len(books), len(books[0]),
+            build=lambda: _query_adc_tables(
+                queries, books, dim, query_id_col, query_vec_col
+            ),
+        )
     import numpy as np
 
-    memo_key = None
-    if cache_key is not None:
-        memo_key = (
-            queries.sparkSession.sparkContext.applicationId,
-            cache_key, dim, len(books), len(books[0]),
-        )
-        if memo_key in _TABLES_MEMO:
-            return _TABLES_MEMO[memo_key]
     m = len(books)
     d_sub = dim // m
     B = [np.asarray(b) for b in books]
@@ -201,10 +191,7 @@ def _query_adc_tables(
             for s in range(m)
         ]
     )  # m × nq × k
-    out = (q_ids, {qid: per_s[:, qi, :] for qi, qid in enumerate(q_ids)})
-    if memo_key is not None:
-        _TABLES_MEMO[memo_key] = out
-    return out
+    return q_ids, {qid: per_s[:, qi, :] for qi, qid in enumerate(q_ids)}
 
 
 def _cut_and_rerank(
@@ -270,7 +257,7 @@ def pq_adc_topk(
     query_vec_col: str = "qv",
     sim_scale: int = 4,
     codebooks: list | None = None,
-    cache_key: str | None = None,
+    source: str | None = None,
 ) -> DataFrame:
     """Approximate cosine top-k via PQ + ADC + exact re-rank.
 
@@ -290,11 +277,11 @@ def pq_adc_topk(
         if codebooks is not None
         else pq_fit(
             corpus, dim, m=m, k=n_codes, id_col=id_col, vec_col=vec_col,
-            cache_key=cache_key,
+            source=source,
         )
     )
     q_ids, tables = _query_adc_tables(
-        queries, books, dim, query_id_col, query_vec_col, cache_key=cache_key
+        queries, books, dim, query_id_col, query_vec_col, source=source
     )
     n_cand = rerank_factor * k
 
@@ -411,7 +398,7 @@ def ivfpq_topk(
     sim_scale: int = 4,
     centroids: list | None = None,
     codebooks: list | None = None,
-    cache_key: str | None = None,
+    source: str | None = None,
 ) -> DataFrame:
     """IVF + PQ + ADC + exact re-rank — the composition FAISS ships
     as IndexIVFPQ, and the standard billion-scale serving shape: the
@@ -441,11 +428,11 @@ def ivfpq_topk(
         if codebooks is not None
         else pq_fit(
             corpus, dim, m=m, k=n_codes, id_col=id_col, vec_col=vec_col,
-            cache_key=cache_key,
+            source=source,
         )
     )
     _, tables = _query_adc_tables(
-        queries, books, dim, query_id_col, query_vec_col, cache_key=cache_key
+        queries, books, dim, query_id_col, query_vec_col, source=source
     )
     n_cand = rerank_factor * k
 

@@ -23,7 +23,6 @@ import os
 import re
 import shutil
 import sqlite3
-from collections.abc import Callable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -83,28 +82,6 @@ def materialize_query(
     finally:
         df.unpersist()
     return results_table, sample_table
-
-
-def run_pipeline(
-    spark: SparkSession,
-    queries: Mapping[str, Callable[[SparkSession, str], DataFrame]],
-    sf_dir: str,
-) -> dict[str, tuple[str, str]]:
-    """Materialize every query; returns {name: (results, sample)}.
-
-    Releases all session caches afterwards: the dedup/similarity
-    operators cache their signature frames internally, and across a
-    long-lived session those would otherwise accumulate one entry per
-    distinct input (ADVICE r1)."""
-    from .catalog import release_caches
-
-    try:
-        return {
-            name: materialize_query(spark, name, fn(spark, sf_dir))
-            for name, fn in queries.items()
-        }
-    finally:
-        release_caches(spark)
 
 
 def export_samples_to_sqlite(

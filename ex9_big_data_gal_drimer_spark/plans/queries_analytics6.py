@@ -30,14 +30,11 @@ per day).
 
 from __future__ import annotations
 
-import hashlib
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import state
 from ..catalog import table
 from .registry import ITERATIVE_CONSTRUCTION, register
 
@@ -332,12 +329,13 @@ def join_delta_view_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey")
         ).select("o_orderkey", "o_orderdate", "o_totalprice", "c_mktsegment")
 
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    store = os.path.join(tempfile.gettempdir(), f"ex9_join_view_{tag}")
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
-        view_rows(orders.filter(F.col("o_orderdate") < _VIEW_SETTLED)).write.mode(
-            "overwrite"
-        ).parquet(store)
+    store = state.store_path("join_view", sf_dir)
+    state.write_once(
+        lambda: view_rows(orders.filter(F.col("o_orderdate") < _VIEW_SETTLED))
+        .write.mode("overwrite")
+        .parquet(store),
+        store,
+    )
     settled = spark.read.parquet(store)
     delta = view_rows(orders.filter(F.col("o_orderdate") >= _VIEW_DELTA))
     merged = settled.join(

@@ -17,26 +17,13 @@ eliminator a 100 TB star schema has.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import state
 from ..sources.bucketed import bucketed_join, ingest_bucketed
 from .registry import register
-
-_DB = "ex9_bucketed"
-
-
-def _sf_db(prefix: str, sf_dir: str) -> str:
-    """Database name keyed on the FULL sf_dir path, not just its
-    basename — two different directories both named 'sf0.01' must not
-    share (and silently serve) one ingested layout."""
-    import hashlib
-
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    h = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:6]
-    return f"{prefix}_{tag}_{h}"
 
 
 @register(
@@ -56,14 +43,10 @@ def bucketed_join_segment_revenue(spark: SparkSession, sf_dir: str) -> DataFrame
     written bucketBy(8, custkey).sortBy(custkey), so the join itself
     plans with zero exchanges (test_plan_audit pins the plan; this
     entry pins the VALUES against the plain-join oracle)."""
-    db = _sf_db(_DB, sf_dir)
-    ingest_bucketed(
-        spark,
-        sf_dir,
-        num_buckets=8,
-        database=db,
-        location=os.path.join(tempfile.gettempdir(), f"{db}_wh"),
-    )
+    # the database is named after its store, so it is input-keyed too
+    location = state.store_path("bucketed", sf_dir)
+    db = os.path.basename(location)
+    ingest_bucketed(spark, sf_dir, num_buckets=8, database=db, location=location)
     return (
         bucketed_join(spark, database=db)
         .groupBy("c_mktsegment")
@@ -105,14 +88,15 @@ def tpch_q21_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the layout must change the plan, never the values.  Bucketed
     write happens at construction (ITERATIVE_CONSTRUCTION), paid once
     per session and amortized like any ingest-time layout."""
-    db = _sf_db(f"{_DB}_ok", sf_dir)
+    location = state.store_path("bucketed_ok", sf_dir)
+    db = os.path.basename(location)
     ingest_bucketed(
         spark,
         sf_dir,
         num_buckets=8,
         spec={"lineitem": "l_orderkey", "orders": "o_orderkey"},
         database=db,
-        location=os.path.join(tempfile.gettempdir(), f"{db}_wh"),
+        location=location,
     )
     li = spark.table(f"{db}.lineitem_bucketed")
     o = spark.table(f"{db}.orders_bucketed").filter(

@@ -661,10 +661,9 @@ def video_container_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _bounded_docs(spark, sf_dir)
     # cached: both feature branches read this, and recomputing the
     # lineage would pay the pure-Python JPEG encodes twice (round-10
-    # review).  Left persisted by the dedup.py / queries_parity.py
-    # precedent: CacheManager dedupes by logical plan so repeated
-    # invocations hold ONE ~50-row entry per sf_dir, and
-    # catalog.release_caches drops it with the rest.
+    # review).  A query cache: CacheManager dedupes by logical plan so
+    # repeated invocations hold ONE ~50-row entry per sf_dir, and
+    # catalog.release_query_caches releases it.
     both = query_persist(
         docs.mapInPandas(
             _text_to_both_video_containers,

@@ -26,14 +26,11 @@ integer-valued BIGINT sums, event points as small ints clamped in
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import local_df, table
-from ..sources.layout import path_tag
+from .. import state
+from ..catalog import local_df, table, table_path
 from .queries_graph import CC_ORACLE_CTES
 from .registry import ITERATIVE_CONSTRUCTION, register
 
@@ -236,22 +233,22 @@ def incremental_cc_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     watermark = 4 * int(max_id) // 5
 
-    # shared tmp-cache tag contract (full-path keyed) — sources/layout.py
-    store = os.path.join(
-        tempfile.gettempdir(), f"ex9_incr_cc_{path_tag(sf_dir)}"
+    store = state.store_path("incr_cc", table_path(sf_dir, "documents"))
+    state.write_once(
+        lambda: connected_components(
+            pairs.filter(
+                (F.col("doc_id_a") < watermark) & (F.col("doc_id_b") < watermark)
+            )
+        ).write.mode("overwrite").parquet(store),
+        store,
     )
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
-        settled = pairs.filter(
-            (F.col("doc_id_a") < watermark) & (F.col("doc_id_b") < watermark)
-        )
-        connected_components(settled).write.mode("overwrite").parquet(store)
-    state = spark.read.parquet(store)  # (node, component)
+    labels = spark.read.parquet(store)  # (node, component)
 
     delta = pairs.filter(
         (F.col("doc_id_a") >= watermark) | (F.col("doc_id_b") >= watermark)
     )
     return (
-        incremental_components(state, delta)
+        incremental_components(labels, delta)
         .select(
             F.col("node").alias("doc_id"), F.col("component").cast("long")
         )

@@ -2,15 +2,13 @@
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import table
+from .. import state
+from ..catalog import table, table_path
 from .registry import register
 
 
@@ -133,12 +131,9 @@ def sketch_store_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rows-only in the driver (sketch estimates are engine-specific).
     """
     orders = table(spark, sf_dir, "orders")
-    # Deterministic per-SF store location: reruns overwrite (idempotent
-    # sink), different scale factors don't collide.
-    store = os.path.join(
-        tempfile.gettempdir(),
-        f"ex9_sketch_store_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
+    # Deterministic per-input store location: reruns overwrite
+    # (idempotent sink), different inputs don't collide.
+    store = state.store_path("sketch_store", table_path(sf_dir, "orders"))
     daily = orders.groupBy(
         F.date_trunc("month", "o_orderdate").alias("month"),
         F.date_trunc("day", "o_orderdate").alias("day"),

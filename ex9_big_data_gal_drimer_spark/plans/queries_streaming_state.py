@@ -18,10 +18,11 @@ artifacts it leaves behind as plain batch DataFrames:
   IS SQL-expressible — the snapshot must equal a plain groupBy over
   the same events — so it carries a DuckDB oracle.
 
-Both memoize their pipeline run per (session, sf_dir): repeated
+Both memoize their pipeline run per (session, events input): repeated
 invocations (bench repeats) re-query the existing artifacts, exactly
 like production where the stream runs continuously and consumers
-query its state.
+query its state.  Each run works in a fresh ``mkdtemp`` directory, so
+no later session can pick up a half-written checkpoint.
 """
 
 from __future__ import annotations
@@ -32,10 +33,9 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import state
+from ..catalog import table_path
 from .registry import register
-
-#: {(applicationId, sf_dir): artifact_dir} for each pipeline.
-_RUNS: dict[tuple[str, str, str], str] = {}
 
 
 def _events_stream_dir(sf_dir: str, workdir: str) -> str:
@@ -59,29 +59,29 @@ def _run_windowed_checkpoint(spark: SparkSession, sf_dir: str) -> str:
         tumbling_counts,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "ckpt")
-    if key in _RUNS:
-        return _RUNS[key]
-    work = tempfile.mkdtemp(prefix="state_inventory_")
-    ckpt = os.path.join(work, "checkpoint")
-    stream = read_events_stream(spark, _events_stream_dir(sf_dir, work))
-    agg = tumbling_counts(stream, window="1 hour", watermark="30 minutes")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(f"state_inv_{abs(hash(key)) % 10**8}")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    # awaitTermination returns False on timeout (it only raises on
-    # query failure) — memoizing a half-written checkpoint would serve
-    # wrong state for the rest of the session, so fail loud instead
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("state-inventory stream did not drain in 300 s")
-    _RUNS[key] = ckpt
-    return ckpt
+    def run() -> str:
+        work = tempfile.mkdtemp(prefix="state_inventory_")
+        ckpt = os.path.join(work, "checkpoint")
+        stream = read_events_stream(spark, _events_stream_dir(sf_dir, work))
+        agg = tumbling_counts(stream, window="1 hour", watermark="30 minutes")
+        q = (
+            agg.writeStream.format("memory")
+            .queryName(os.path.basename(work))
+            .outputMode("append")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        # awaitTermination returns False on timeout (it only raises on
+        # query failure) — memoizing a half-written checkpoint would
+        # serve wrong state for the rest of the session, so fail loud
+        if not q.awaitTermination(300):
+            q.stop()
+            raise TimeoutError("state-inventory stream did not drain in 300 s")
+        return ckpt
+
+    events = table_path(sf_dir, "events")
+    return state.memo(spark, "state_inventory_run", events, build=run)
 
 
 @register("state_operator_inventory")
@@ -142,9 +142,7 @@ def merge_sink_upsert_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.sinks import read_merge_state, stream_merge_upsert_sink
     from ..streaming.windows import read_events_stream
 
-    key = (spark.sparkContext.applicationId, sf_dir, "merge")
-    state_dir = _RUNS.get(key)
-    if state_dir is None:
+    def run() -> str:
         work = tempfile.mkdtemp(prefix="merge_sink_")
         state_dir = os.path.join(work, "state")
         ckpt = os.path.join(work, "checkpoint")
@@ -154,7 +152,10 @@ def merge_sink_upsert_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not q.awaitTermination(300):
             q.stop()
             raise TimeoutError("merge sink did not drain in 300 s")
-        _RUNS[key] = state_dir
+        return state_dir
+
+    events = table_path(sf_dir, "events")
+    state_dir = state.memo(spark, "merge_sink_run", events, build=run)
     return (
         read_merge_state(spark, state_dir)
         .select(

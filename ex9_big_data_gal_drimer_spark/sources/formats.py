@@ -91,30 +91,30 @@ def read_xml(
 
 def ingest_multiformat(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     """Idempotently materialize the same orders projection as JSONL,
-    ORC, and XML under tmp (path_tag-keyed like the other ingests) and
-    return {format: path}.  The projection carries the price as exact
-    BIGINT cents so every format round-trips the measure bit-exactly
-    regardless of its float-text conventions."""
+    ORC, and XML under tmp (a ``state.store_path`` keyed on the orders
+    input, written once) and return {format: path}.  The projection
+    carries the price as exact BIGINT cents so every format
+    round-trips the measure bit-exactly regardless of its float-text
+    conventions."""
     import os
-    import tempfile
 
-    from .layout import load_table, path_tag
+    from .. import state
+    from ..catalog import load_table, table_path
 
-    sf_tag = path_tag(sf_dir)
-    root = os.path.join(tempfile.gettempdir(), f"ex9_formats_{sf_tag}")
+    root = state.store_path("formats", table_path(sf_dir, "orders"))
     paths = {f: os.path.join(root, f) for f in ("jsonl", "orc", "xml")}
-    if all(
-        os.path.exists(os.path.join(p, "_SUCCESS")) for p in paths.values()
-    ):
-        return paths
-    df = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_orderstatus",
-        F_round_cents("o_totalprice").alias("price_cents"),
-    )
-    write_jsonl(df, paths["jsonl"])
-    write_orc(df, paths["orc"])
-    write_xml(df, paths["xml"])
+
+    def write():
+        df = load_table(spark, sf_dir, "orders").select(
+            "o_orderkey",
+            "o_orderstatus",
+            F_round_cents("o_totalprice").alias("price_cents"),
+        )
+        write_jsonl(df, paths["jsonl"])
+        write_orc(df, paths["orc"])
+        write_xml(df, paths["xml"])
+
+    state.write_once(write, *paths.values())
     return paths
 
 

@@ -15,31 +15,18 @@ date-partitioned 100 TB table dies of when skipped.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from .. import state
+from ..catalog import load_table, table_path
 
 #: Partition column derived at ingest: month granularity keeps
 #: partition counts sane (a 7-year fact table → ~84 dirs; day
 #: granularity would be ~2.5k — still fine — but month matches the
 #: rollup queries' grain).
 PART_COL = "l_ship_month"
-
-
-def path_tag(sf_dir: str) -> str:
-    """Tmp-cache tag keyed on the FULL sf_dir path (basename +
-    abspath hash), not just its basename — two different directories
-    both named 'sf0.01' must not share (and silently serve) one
-    ingested layout.  Same contract as queries_bucketed._sf_db /
-    queries_incremental's store tag."""
-    import hashlib
-
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    h = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:6]
-    return f"{tag}_{h}"
 
 
 def ingest_partitioned(
@@ -54,19 +41,20 @@ def ingest_partitioned(
     reused instead of rewritten, the nightly-ingest/every-query-read
     split the layout exists for.
     """
-    sf_tag = path_tag(sf_dir)
-    path = os.path.join(tempfile.gettempdir(), f"ex9_layout_{sf_tag}", table)
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return path
-    df = load_table(spark, sf_dir, table).withColumn(
-        PART_COL, F.date_format("l_shipdate", "yyyy-MM")
-    )
-    (
-        df.repartition(F.col(PART_COL))
-        .write.mode("overwrite")
-        .partitionBy(PART_COL)
-        .parquet(path)
-    )
+    path = state.store_path("layout", table_path(sf_dir, table))
+
+    def write():
+        df = load_table(spark, sf_dir, table).withColumn(
+            PART_COL, F.date_format("l_shipdate", "yyyy-MM")
+        )
+        (
+            df.repartition(F.col(PART_COL))
+            .write.mode("overwrite")
+            .partitionBy(PART_COL)
+            .parquet(path)
+        )
+
+    state.write_once(write, path)
     return path
 
 
@@ -100,21 +88,19 @@ def ingest_sorted(
     skipping is observable at test scale; production uses the 128 MB
     default.
 
-    Idempotent: path-keyed by scale factor, overwrite mode.
+    Idempotent: keyed on the source table, written once.
     """
-    sf_tag = path_tag(sf_dir)
-    path = os.path.join(
-        tempfile.gettempdir(), f"ex9_sorted_{sf_tag}_{block_size}", table
+    path = state.store_path(
+        "sorted", table_path(sf_dir, table), sort_col, n_files, block_size
     )
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return path
-    df = load_table(spark, sf_dir, table)
-    (
-        df.repartitionByRange(n_files, F.col(sort_col))
+    state.write_once(
+        lambda: load_table(spark, sf_dir, table)
+        .repartitionByRange(n_files, F.col(sort_col))
         .sortWithinPartitions(sort_col)
         .write.mode("overwrite")
         .option("parquet.block.size", block_size)
-        .parquet(path)
+        .parquet(path),
+        path,
     )
     return path
 
@@ -201,15 +187,22 @@ def ingest_zordered(
     predicates on either column or both — the layout for fact tables
     with two independent access paths (time + entity id).
 
-    Idempotent like the other ingests (path keyed, _SUCCESS check).
+    Idempotent like the other ingests (source keyed, written once).
     """
-    sf_tag = path_tag(sf_dir)
-    path = os.path.join(
-        tempfile.gettempdir(), f"ex9_zorder_{sf_tag}_{bits}_{block_size}", table
+    path = state.store_path(
+        "zorder", table_path(sf_dir, table), cols, n_files, bits, block_size
     )
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return path
-    df = load_table(spark, sf_dir, table)
+    state.write_once(
+        lambda: _write_zordered(
+            load_table(spark, sf_dir, table), path, cols, n_files, bits,
+            block_size,
+        ),
+        path,
+    )
+    return path
+
+
+def _write_zordered(df, path, cols, n_files, bits, block_size) -> None:
     def as_num(c):
         # timestamps (ltz or ntz) → epoch seconds; numerics cast direct
         if df.schema[c].dataType.typeName().startswith("timestamp"):
@@ -242,7 +235,6 @@ def ingest_zordered(
         .option("parquet.block.size", block_size)
         .parquet(path)
     )
-    return path
 
 
 def ingest_evolving(spark: SparkSession, sf_dir: str, table: str = "orders") -> tuple[str, str]:
@@ -255,21 +247,22 @@ def ingest_evolving(spark: SparkSession, sf_dir: str, table: str = "orders") -> 
     ``mergeSchema=true``; v1 rows surface NULL for the late column.
     Returns the two generation paths.  Idempotent via _SUCCESS
     markers, same contract as ingest_partitioned."""
-    sf_tag = path_tag(sf_dir)
-    root = os.path.join(tempfile.gettempdir(), f"ex9_evolving_{sf_tag}", table)
+    root = state.store_path("evolving", table_path(sf_dir, table))
     v1, v2 = os.path.join(root, "v1"), os.path.join(root, "v2")
-    if all(os.path.exists(os.path.join(p, "_SUCCESS")) for p in (v1, v2)):
-        return v1, v2
-    base = load_table(spark, sf_dir, table)
-    cut = F.lit("1998-01-01").cast("timestamp_ntz")
-    old_cols = ["o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"]
-    channel = F.when(
-        F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), "online"
-    ).otherwise("store")
-    base.filter(F.col("o_orderdate") < cut).select(*old_cols).coalesce(
-        4
-    ).write.mode("overwrite").parquet(v1)
-    base.filter(F.col("o_orderdate") >= cut).select(
-        *old_cols, channel.alias("o_channel")
-    ).coalesce(4).write.mode("overwrite").parquet(v2)
+
+    def write():
+        base = load_table(spark, sf_dir, table)
+        cut = F.lit("1998-01-01").cast("timestamp_ntz")
+        old_cols = ["o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"]
+        channel = F.when(
+            F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), "online"
+        ).otherwise("store")
+        base.filter(F.col("o_orderdate") < cut).select(*old_cols).coalesce(
+            4
+        ).write.mode("overwrite").parquet(v1)
+        base.filter(F.col("o_orderdate") >= cut).select(
+            *old_cols, channel.alias("o_channel")
+        ).coalesce(4).write.mode("overwrite").parquet(v2)
+
+    state.write_once(write, v1, v2)
     return v1, v2

@@ -62,6 +62,22 @@ def test_semdedup_finds_planted_pair_within_cluster_only(spark):
     assert all(p["id_a"] // 10 == p["id_b"] // 10 for p in loose)
 
 
+def test_kmeans_fit_releases_its_training_cache(spark):
+    """kmeans_fit persists its corpus for the Lloyd loop only: the
+    session's persistent-RDD count after the fit equals the count
+    before it — also when a Lloyd round raises (ragged vectors)."""
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    kmeans_fit(_synthetic(spark), k=3, n_iter=2).collect()
+    assert persistent().size() == before
+    ragged = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0, 0.0])], "vec_id LONG, v ARRAY<DOUBLE>"
+    )
+    with pytest.raises(Exception):
+        kmeans_fit(ragged, k=1, n_iter=1)
+    assert persistent().size() == before
+
+
 def test_kmeans_improves_inertia(spark):
     """Cosine inertia (sum of best similarities) must not decrease
     round-over-round — the Lloyd convergence property."""
