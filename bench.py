@@ -1,9 +1,16 @@
 #!/usr/bin/env python
-"""Benchmark harness: run every registered query at $SPARK_GRAFT_SF_DIR.
+"""Benchmark harness: run the registered queries at $SPARK_GRAFT_SF_DIR.
 
-Prints ONE JSON line:
-  {"metric": "suite_seconds", "value": N, "unit": "sec",
-   "queries": {...per-query sec...}, "sf": 0.1}
+Usage: python bench.py [name ...] [--explain DIR]
+
+Names restrict the run to those queries.  ``--explain DIR`` writes
+each query's ``explain("formatted")`` to DIR/<query>.txt.
+
+Prints ONE compact JSON line (suite total, the hotels_q* medians, a
+pointer to the full JSON) and writes the full JSON — "queries" {name:
+median sec} and "records" {name: record} — to $SPARK_GRAFT_BENCH_OUT,
+else for a whole-registry run to BENCH_FULL_r{N}.json next to this
+script.  A named-query run writes no file unless told to.
 
 Methodology (matches BASELINE.md): warm timings — one untimed warmup
 run per query (pays codegen/classload), then the MEDIAN of
@@ -15,19 +22,22 @@ floor the way the reference amortizes its single DuckDB connection
 (reference main.py:236).
 
 Suite amortization: the testdata tables are cached once up front
-(catalog.cache_tables) so 56 queries x 4 runs don't re-read and
-re-decode the same parquet ~224 times; the cache fill is reported
-separately as "setup_seconds" and not charged to any query.
+(catalog.cache_tables) so 246 queries x 4 runs don't re-read and
+re-decode the same parquet; the cache fill is reported separately as
+"setup_seconds" and not charged to any query.
 
-Extra diagnostics in the JSON line (ignored by the driver's
-metric parser, useful for round-over-round tracking):
-  - "setup_seconds": table cache fill time
-  - "delta_vs_prev": per-query delta against the newest BENCH_r*.json
-    found next to this script (negative = faster this round)
+Per-query record: every timed rep runs under its own Spark job group
+and reads its facts right after its stopwatch stops, so a run explains
+itself without a re-run.  A record holds ``min_s``/``median_s``/
+``max_s`` of the reps and the last rep's ``jobs``/``stages``/``tasks``
+(construction-time jobs included) plus its executed-plan metrics
+(:func:`collect_plan_metrics`).
 """
 
 from __future__ import annotations
 
+import argparse
+import contextlib
 import glob
 import json
 import os
@@ -52,7 +62,57 @@ from ex9_big_data_gal_drimer_spark.catalog import (
     release_query_caches,
 )
 from ex9_big_data_gal_drimer_spark.plans import QUERIES
+from ex9_big_data_gal_drimer_spark.plans.registry import ITERATIVE_CONSTRUCTION
 from ex9_big_data_gal_drimer_spark.session import get_spark
+from perfbench.spark_trace import read_counters
+
+
+def _node_metrics(node) -> dict[str, int]:
+    out = {}
+    it = node.metrics().iterator()
+    while it.hasNext():
+        kv = it.next()
+        try:
+            out[kv._1()] = int(kv._2().value())
+        except Exception:  # noqa: BLE001 — non-numeric metric
+            pass
+    return out
+
+
+def collect_plan_metrics(df) -> dict[str, int]:
+    """Walk ``df``'s executed plan, summing the scale-relevant metrics:
+    not "is there a shuffle" but "how much does each shuffle carry"."""
+    agg = {
+        "n_exchanges": 0,
+        "shuffle_bytes": 0,
+        "shuffle_records": 0,
+        "spill_bytes": 0,
+        "broadcast_bytes": 0,
+        "scan_rows": 0,
+    }
+
+    def walk(node):
+        name = node.nodeName()
+        m = _node_metrics(node)
+        if name.startswith("Exchange") or "ShuffleExchange" in name:
+            agg["n_exchanges"] += 1
+            agg["shuffle_bytes"] += m.get("shuffleBytesWritten", 0)
+            agg["shuffle_records"] += m.get("shuffleRecordsWritten", 0)
+        if "BroadcastExchange" in name:
+            agg["broadcast_bytes"] += m.get("dataSize", 0)
+        if "Scan" in name:
+            agg["scan_rows"] += m.get("numOutputRows", 0)
+        for k, v in m.items():
+            if "spill" in k.lower():
+                agg["spill_bytes"] += v
+        # With AQE off the children walk is complete (AQE would hang
+        # materialized subtrees off query-stage inputs instead).
+        ch = node.children()
+        for i in range(ch.length()):
+            walk(ch.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return agg
 
 
 def _matches_committed(
@@ -117,12 +177,8 @@ def _snapshot_before_overwrite(here: str, full_path: str) -> None:
 def _previous_bench(
     here: str, exclude: str | None = None
 ) -> tuple[str, dict[str, float]] | None:
-    """Newest committed bench numbers, for delta reporting: prefer the
-    newest BENCH_FULL_r{N}.json (bench.py writes it with the COMPLETE
-    per-query map), falling back to the newest driver BENCH_r{N}.json
-    whose 2000-char stdout tail must be scraped (and whose truncation
-    can silently produce bogus per-query baselines — the reason FULL
-    wins even for an older round number).
+    """Newest committed bench numbers, for delta reporting: the
+    per-query map of the newest BENCH_FULL_r{N}.json.
 
     `exclude` is the path this run is about to (over)write: a rerun in
     place must never pick its own first pass as the baseline, or the
@@ -137,31 +193,12 @@ def _previous_bench(
         m = re.search(r"BENCH_FULL_r(\d+)\.json$", path)
         if m:
             fulls.append((int(m.group(1)), path))
-    if fulls:
-        try:
-            _, path = max(fulls)
-            with open(path) as fh:
-                return os.path.basename(path), json.load(fh)["queries"]
-        except (OSError, json.JSONDecodeError, KeyError):
-            pass
-    best = _newest_round(here)
-    if best is None:
+    if not fulls:
         return None
+    _, path = max(fulls)
     try:
-        with open(best[1]) as fh:
-            data = json.load(fh)
-        queries = data.get("queries") or (data.get("parsed") or {}).get(
-            "queries", {}
-        )
-        if not queries:
-            # Scrape "name": seconds pairs out of the stdout tail; the
-            # queries dict precedes the delta section, so the FIRST
-            # occurrence of a name is its absolute time.
-            for name, sec in re.findall(r'"(\w+)": (\d+\.\d+)', data.get("tail", "")):
-                if name not in queries and name not in ("sf", "value"):
-                    queries[name] = float(sec)
-            queries.pop("setup_seconds", None)
-        return os.path.basename(best[1]), queries
+        with open(path) as fh:
+            return os.path.basename(path), json.load(fh)["queries"]
     except (OSError, json.JSONDecodeError, KeyError):
         return None
 
@@ -176,7 +213,18 @@ def _newest_round(here: str) -> tuple[int, str] | None:
     return best
 
 
-def main() -> int:
+def main(argv: list[str] | None = None) -> int:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("names", nargs="*", help="queries to run (default: all)")
+    ap.add_argument(
+        "--explain", metavar="DIR", help="write each plan to DIR/<query>.txt"
+    )
+    args = ap.parse_args(argv)
+    unknown = sorted(set(args.names) - set(QUERIES))
+    if unknown:
+        ap.error(f"unknown queries: {', '.join(unknown)}")
+    names = sorted(set(args.names or QUERIES))
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf"))
@@ -185,59 +233,57 @@ def main() -> int:
 
     repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
 
-    spark = get_spark(app_name="ex9-bench")
-
-    # Size the static shuffle-partition count to the benched scale
-    # factor (the brief's "size shuffle partitions to the target SF"):
-    # post-shuffle data at sf<=0.1 is a few MB, so 8 partitions cut
+    # Static shuffle partitions sized to the benched scale factors: the
+    # post-shuffle data at sf<=0.1 is a few MB, so 4 partitions cut
     # task-dispatch overhead without losing parallelism — operators
     # that need CPU fan-out repartition(defaultParallelism) explicitly,
-    # which ignores this knob.  On a real cluster AQE coalescing makes
-    # the static number moot; leave the session default (32) there.
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "4"),
+    # which ignores this.  AQE is off: sub-second post-agg queries at
+    # sf<=0.1 spend its per-stage re-planning (extra job boundaries)
+    # with nothing to coalesce beyond the already-small static count —
+    # disabling it cut the flagship six ~20 % (round-2 verdict ask #4).
+    # On a real cluster both stay at the session defaults (32
+    # partitions, AQE on).
+    #
+    # The status store evicts skipped stages first (they have no
+    # completion time) once it holds more than spark.ui.retainedStages
+    # (default 1000), while read_counters looks up every stage of a
+    # rep's jobs: keep every stage a registry run creates (~6k at
+    # sf0.01).
+    #
+    # get_spark also turns on Arrow-columnar result materialization:
+    # the timed action is toArrow() + a local Arrow→pandas conversion,
+    # matching how the reference consumes DuckDB results (.df() →
+    # pandas).  Row-based collect() serializes ~100k-row results one
+    # Row at a time through Py4J and was charging events_session_10m
+    # ~0.8 s of pure client transfer that the DuckDB baseline's native
+    # columnar fetch never pays.  df.toPandas() is NOT used: it wraps
+    # the same Arrow collect in per-call Py4J conf lookups and
+    # per-column coercion that measured up to +0.23 s on sub-second
+    # queries — client wrapper chatter, not engine work.
+    spark = get_spark(
+        app_name="ex9-bench",
+        shuffle_partitions=4,
+        extra_conf={
+            "spark.sql.adaptive.enabled": "false",
+            "spark.ui.retainedStages": "100000",
+        },
     )
-    # Sub-second post-agg queries at sf<=0.1 spend AQE's per-stage
-    # re-planning (extra job boundaries) without anything to coalesce
-    # beyond the already-small static partition count — disabling it in
-    # bench cut the flagship six ~20 % (round-2 verdict ask #4).  On a
-    # real cluster AQE stays on (session default): coalescing, skew
-    # splitting and runtime broadcast decisions all matter at scale.
-    spark.conf.set(
-        "spark.sql.adaptive.enabled",
-        os.environ.get("SPARK_GRAFT_BENCH_AQE", "false"),
-    )
-    # Arrow-columnar result materialization: the timed action is
-    # toArrow() + a local Arrow→pandas conversion, matching how the
-    # reference consumes DuckDB results (.df() → pandas).  Row-based
-    # collect() serializes ~100k-row results one Row at a time through
-    # Py4J and was charging events_session_10m ~0.8 s of pure client
-    # transfer that the DuckDB baseline's native columnar fetch never
-    # pays.  df.toPandas() is NOT used: it wraps the same Arrow
-    # collect in per-call Py4J conf lookups and per-column coercion
-    # that measured up to +0.23 s on sub-second queries — client
-    # wrapper chatter, not engine work.
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
+    sc = spark.sparkContext
 
     t0 = time.perf_counter()
     cache_tables(spark, sf_dir)
     setup_seconds = round(time.perf_counter() - t0, 3)
-
-    # Iterative/materializing operators run actions during plan
-    # CONSTRUCTION (fixpoint loops, sketch-store writes, the
-    # vectorized top-k's query-vector collect); excluding construction
-    # from their timing would hide the real work.
-    from ex9_big_data_gal_drimer_spark.plans.registry import (
-        ITERATIVE_CONSTRUCTION as iterative,
-    )
+    if args.explain:
+        os.makedirs(args.explain, exist_ok=True)
 
     def fetch(df):
         """Materialize a result as pandas via the Arrow collect."""
         return df.toArrow().to_pandas()
 
     times: dict[str, float] = {}
-    for name, fn in sorted(QUERIES.items()):
+    records: dict[str, dict] = {}
+    for name in names:
+        fn = QUERIES[name]
         # Each timed run REBUILDS the DataFrame so the physical DAG is
         # fresh and every stage genuinely re-executes (re-collecting
         # one DataFrame object would silently reuse its shuffle map
@@ -246,6 +292,11 @@ def main() -> int:
         # scheduling, execution, Arrow result transfer and the pandas
         # conversion — not the Python-side plan construction, which is
         # client chatter DuckDB's sub-ms parse has no analogue for.
+        # Iterative/materializing operators (ITERATIVE_CONSTRUCTION)
+        # run actions during plan CONSTRUCTION (fixpoint loops,
+        # sketch-store writes, the vectorized top-k's query-vector
+        # collect), so their stopwatch covers construction too:
+        # excluding it would hide the real work.
         # Query-created caches (intra-query intermediates registered
         # via catalog.query_persist) are RELEASED before every timed
         # run, so each run re-materializes them and the persist's fill
@@ -258,24 +309,44 @@ def main() -> int:
         # fill; base caches (cache_tables) are never released here.
         fetch(fn(spark, sf_dir))  # untimed warmup (codegen, cache fill)
         samples = []
-        for _ in range(repeats):
+        for i in range(repeats):
             release_query_caches()
-            if name in iterative:
+            group = f"bench:{name}#{i}"
+            sc.setJobGroup(group, name)
+            if name in ITERATIVE_CONSTRUCTION:
                 t0 = time.perf_counter()
-                fetch(fn(spark, sf_dir))
+                df = fn(spark, sf_dir)
+                fetch(df)
             else:
                 df = fn(spark, sf_dir)
                 t0 = time.perf_counter()
                 fetch(df)
             samples.append(time.perf_counter() - t0)
+            # The rep's facts are read after its stopwatch stops; every
+            # rep reads them, so every rep runs the same code.
+            counters = read_counters(spark, group)
+            facts = {k: counters[k] for k in ("jobs", "stages", "tasks")}
+            facts.update(collect_plan_metrics(df))
+        sc._jsc.clearJobGroup()
+        if args.explain:
+            path = os.path.join(args.explain, f"{name}.txt")
+            with open(path, "w") as fh, contextlib.redirect_stdout(fh):
+                df.explain("formatted")
         release_query_caches()
         times[name] = round(statistics.median(samples), 3)
+        records[name] = {
+            "min_s": round(min(samples), 3),
+            "median_s": times[name],
+            "max_s": round(max(samples), 3),
+            **facts,
+        }
 
     out = {
         "metric": "suite_seconds",
         "value": round(sum(times.values()), 3),
         "unit": "sec",
         "queries": times,
+        "records": records,
         "sf": sf,
         "setup_seconds": setup_seconds,
         # Effective JVM heap, read back from the live session: artifact
@@ -289,15 +360,17 @@ def main() -> int:
 
     # The driver keeps only the tail of stdout, so round-N's per-query
     # numbers would survive only as deltas inside the next round's file
-    # (round-2 verdict ask #2).  Persist the complete JSON in-repo too:
-    # BENCH_FULL_r{N}.json where N = newest driver BENCH_r*.json + 1
-    # (the round about to be recorded).  Overridable for local runs so
-    # iterating at sf0.01 never clobbers a round artifact.  The output
-    # path is resolved BEFORE the delta baseline so a rerun in place
-    # excludes its own first pass from the candidate set.
+    # (round-2 verdict ask #2).  A whole-registry run persists the
+    # complete JSON in-repo too: BENCH_FULL_r{N}.json where N = newest
+    # driver BENCH_r*.json + 1 (the round about to be recorded).
+    # Overridable for local runs so iterating at sf0.01 never clobbers
+    # a round artifact; a named-query run is a probe and writes only
+    # where told.  The output path is resolved BEFORE the delta
+    # baseline so a rerun in place excludes its own first pass from
+    # the candidate set.
     here = os.path.dirname(os.path.abspath(__file__))
     full_path = os.environ.get("SPARK_GRAFT_BENCH_OUT")
-    if full_path is None:
+    if full_path is None and not args.names:
         newest = _newest_round(here)
         round_n = (newest[0] if newest else 0) + 1
         full_path = os.path.join(here, f"BENCH_FULL_r{round_n:02d}.json")
@@ -314,18 +387,18 @@ def main() -> int:
             },
         }
 
-    _snapshot_before_overwrite(here, full_path)
-    with open(full_path, "w") as fh:
-        json.dump(out, fh, indent=2, sort_keys=True)
-        fh.write("\n")
+    if full_path is not None:
+        _snapshot_before_overwrite(here, full_path)
+        with open(full_path, "w") as fh:
+            json.dump(out, fh, indent=2, sort_keys=True)
+            fh.write("\n")
 
     # The driver keeps only the last 2000 chars of stdout and attempts
     # to json-parse them; the full 221-query map is ~10 KB, so printing
     # it put the line's head past the tail window and left the driver's
     # "parsed" field null every round (round-8 verdict ask #4).  Print
     # a COMPACT line instead: suite metric + the flagship hotels
-    # headline queries, with a pointer to the full per-query artifact
-    # (always persisted above, committed per round as BENCH_FULL_r{N}).
+    # headline queries, with a pointer to the full per-query artifact.
     compact = {
         "metric": "suite_seconds",
         "value": out["value"],
@@ -334,7 +407,7 @@ def main() -> int:
         "sf": sf,
         "setup_seconds": setup_seconds,
         "n_queries": len(times),
-        "full": os.path.basename(full_path),
+        "full": full_path and os.path.basename(full_path),
     }
     print(json.dumps(compact))
     return 0

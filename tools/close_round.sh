@@ -32,19 +32,10 @@ for prev in ./*.json.prev; do
     echo "keeping in-round snapshot ${prev} (differs from HEAD)"
   fi
 done
-echo "=== bench sf0.1 -> BENCH_FULL_${R}.json ==="
+echo "=== bench sf0.1 (timings + shuffle records) -> BENCH_FULL_${R}.json ==="
 SPARK_GRAFT_BENCH_OUT=BENCH_FULL_${R}.json python bench.py > /tmp/bench_${R}.json
 echo "=== DuckDB baseline -> DUCKDB_SF01.json ==="
 python tools/duckdb_baseline.py /root/testdata/sf0.1 DUCKDB_SF01.json
-echo "=== shuffle audit -> SHUFFLE_${R}.json ==="
-python tools/shuffle_audit.py /root/testdata/sf0.1 SHUFFLE_${R}.json
-echo "=== sf1 shuffle audit -> SHUFFLE_sf1_${R}.json (round-6 ask #5) ==="
-if [ ! -f data/sf1/lineitem.parquet ]; then
-  # fail loudly: a silent skip would close the round without the
-  # required sf1 shuffle artifact (round-7 review finding)
-  python tools/make_sf1.py
-fi
-python tools/shuffle_audit.py data/sf1 SHUFFLE_sf1_${R}.json
 echo "=== full-registry preflight -> CORRECTNESS_LOCAL_${R}.json ==="
 python tools/preflight.py /root/testdata/sf0.01 999 CORRECTNESS_LOCAL_${R}.json
 echo "=== vintage gate (round-6 ask #7) ==="
@@ -52,13 +43,16 @@ python tools/preflight.py --check-vintage
 echo "=== scaling benches ==="
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 SPARK_GRAFT_BENCH_OUT=SCALING_sf0_001.json python bench.py > /tmp/scaling_001_${R}.json
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 SPARK_GRAFT_BENCH_OUT=SCALING_sf0_01.json python bench.py > /tmp/scaling_01_${R}.json
-if [ -f data/sf1/lineitem.parquet ] || python tools/make_sf1.py; then
-  # bench.py now defaults every leg to a 16g JVM (first measured as an
-  # sf1 OOM here, then as a uniform ~9% GC-pressure inflation at
-  # sf0.1 once the registry hit 230 queries — see bench.py header);
-  # the env var stays overridable.
-  SPARK_GRAFT_SF_DIR=data/sf1 SPARK_GRAFT_BENCH_OUT=SCALING_sf1.json python bench.py > /tmp/scaling_1_${R}.json
+if [ ! -f data/sf1/lineitem.parquet ]; then
+  # fail loudly: a silent skip would close the round without the sf1
+  # records the summary's shuffle and spill checks read (round-7
+  # review finding)
+  python tools/make_sf1.py
 fi
+# bench.py defaults every leg to a 16g JVM (first measured as an sf1
+# OOM here, then as a uniform ~9% GC-pressure inflation at sf0.1 once
+# the registry hit 230 queries — see bench.py header).
+SPARK_GRAFT_SF_DIR=data/sf1 SPARK_GRAFT_BENCH_OUT=SCALING_sf1.json python bench.py > /tmp/scaling_1_${R}.json
 echo "=== summary + consistency gate ==="
 python tools/summarize_artifacts.py ${R}
 echo "=== DONE — now update BASELINE.md tables, README counts, PLANS.md shuffle headline ==="

@@ -6,10 +6,11 @@ queries must self-configure via session.configure), the FIRST 50
 registered queries at sf0.01, each compared against its DuckDB oracle
 with driver semantics (column-name-sorted tuples, sorted rows,
 None-safe ordering, tight float tolerance).  Rows-only queries are
-executed and reported with their row counts.
+executed and reported with their row counts.  Query names in place of
+the window spot-check just those queries.
 
-Usage: python tools/preflight.py [sf_dir] [n_window]
-Exit code 0 = every oracle query in the window matches.
+Usage: python tools/preflight.py [sf_dir] [n_window [out_json] | name ...]
+Exit code 0 = every oracle query checked matches.
 
 Vintage gate (round-6 verdict ask #7):
 
@@ -77,8 +78,8 @@ def compare_result(
 
     Returns (verdict, detail): verdict is one of 'schema', 'rows',
     'values', 'ok'.  Single source of truth for the gate semantics —
-    used by the window preflight AND tools/check_queries.py so a canon
-    change can never silently diverge between the two.
+    used by the preflight AND the benchmark's result checks so a canon
+    change can never silently diverge between them.
     """
     if sorted(scols) != sorted(ocols):
         return "schema", f"schema {sorted(scols)} vs {sorted(ocols)}"
@@ -191,8 +192,9 @@ def main() -> int:
     if len(sys.argv) > 1 and sys.argv[1] == "--check-vintage":
         return check_vintage(int(sys.argv[2]) if len(sys.argv) > 2 else 4)
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    n_window = int(sys.argv[2]) if len(sys.argv) > 2 else 50
-    out_json = sys.argv[3] if len(sys.argv) > 3 else None
+    rest = sys.argv[2:]
+    named = bool(rest) and not rest[0].isdigit()
+    out_json = rest[1] if not named and len(rest) > 1 else None
     report: dict[str, dict] = {}
 
     spark = SparkSession.builder.master("local[8]").appName("preflight").getOrCreate()
@@ -204,7 +206,8 @@ def main() -> int:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     fails = []
-    for name in list(queries)[:n_window]:
+    names = rest if named else list(queries)[: int(rest[0]) if rest else 50]
+    for name in names:
         # "status" disambiguates the dual-use err field (the driver's
         # format reuses err='no_oracle' for by-design rows-only
         # entries): ok | rows_only | fail
@@ -218,6 +221,9 @@ def main() -> int:
             "status": "fail",
         }
         report[name] = row
+        if name not in queries:
+            fails.append((name, "not registered"))
+            continue
         try:
             sdf = queries[name](spark, sf_dir)
             srows = [tuple(r) for r in sdf.collect()]

@@ -28,6 +28,22 @@ def load(path: str) -> dict:
         return json.load(f)
 
 
+def shuffle_summary(records: dict[str, dict]) -> dict:
+    """Suite shuffle total, spilling queries and top-10 shufflers from a
+    bench run's per-query records (executed-plan metrics)."""
+    worst = sorted(records.items(), key=lambda kv: -kv[1]["shuffle_bytes"])[:10]
+    return {
+        "total_shuffle_mb": round(
+            sum(r["shuffle_bytes"] for r in records.values()) / 1e6, 2
+        ),
+        "queries_with_spill": [q for q, r in records.items() if r["spill_bytes"]],
+        "top_shufflers": [
+            (q, round(r["shuffle_bytes"] / 1e6, 3), r["shuffle_records"])
+            for q, r in worst
+        ],
+    }
+
+
 def main() -> int:
     benches = sorted(glob.glob("BENCH_FULL_r*.json"))
     if not benches:
@@ -37,10 +53,10 @@ def main() -> int:
         r"(r\d+)", benches[-1]
     ).group(1)
 
-    bench = load(f"BENCH_FULL_{tag}.json")["queries"]
+    bench_full = load(f"BENCH_FULL_{tag}.json")
+    bench, records = bench_full["queries"], bench_full.get("records", {})
     duck = load("DUCKDB_SF01.json")
     dq = duck.get("queries", duck)
-    shuffle = load(f"SHUFFLE_{tag}.json")["summary"]
     local = load(f"CORRECTNESS_LOCAL_{tag}.json")
     lrows = list(local.values()) if isinstance(local, dict) else local
 
@@ -63,18 +79,19 @@ def main() -> int:
     check(len(bench) == n_q, f"bench covers registry ({len(bench)}/{n_q})")
     check(len(dq) == n_o, f"DuckDB baseline covers oracles ({len(dq)}/{n_o})")
     check(
-        shuffle["n_queries"] == n_q,
-        f"shuffle audit covers registry ({shuffle['n_queries']}/{n_q})",
+        len(records) == n_q,
+        f"sf0.1 shuffle records cover registry ({len(records)}/{n_q})",
     )
+    shuffle = shuffle_summary(records)
     try:
-        sh1 = load(f"SHUFFLE_sf1_{tag}.json")["summary"]
+        records1 = load("SCALING_sf1.json").get("records", {})
         check(
-            sh1["n_queries"] == n_q,
-            f"sf1 shuffle audit covers registry ({sh1['n_queries']}/{n_q})",
+            len(records1) == n_q,
+            f"sf1 shuffle records cover registry ({len(records1)}/{n_q})",
         )
-        check(not sh1["queries_with_spill"], "zero spills at sf1")
+        check(not shuffle_summary(records1)["queries_with_spill"], "zero spills at sf1")
     except FileNotFoundError:
-        check(False, f"SHUFFLE_sf1_{tag}.json missing")
+        check(False, "SCALING_sf1.json missing")
     check(
         len(lrows) == n_q,
         f"local preflight covers registry ({len(lrows)}/{n_q})",
@@ -109,6 +126,8 @@ def main() -> int:
     )
     print(f"   bench total {sum(bench.values()):.1f} s / {len(bench)} queries; "
           f"shuffle {shuffle['total_shuffle_mb']} MB")
+    for q, mb, n_records in shuffle["top_shufflers"]:
+        print(f"     {q}: {mb} MB, {n_records} records")
 
     # drift vs the PREVIOUS round's bench (never vs this file itself)
     prev = [b for b in benches if tag not in b]
